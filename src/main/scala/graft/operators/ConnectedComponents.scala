@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Connected components by iterative min-label propagation — turns a
   * near-duplicate PAIR list (q36/q37 output) into duplicate CLUSTERS,
@@ -22,27 +21,9 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Cost model per round: one neighbor equi-join (plus a second hop join
   * from round 3) unioned with the label table into one min-aggregate on
-  * the node id, folded into ONE Spark job — the staged frame is lazy, so
-  * the convergence aggregate's action materializes its blocks while
-  * computing the sum (eager staging ran two jobs per round, and on small
-  * graphs per-round job cost dominates the data cost). The label loop
-  * also narrows `spark.sql.shuffle.partitions` to a width derived from
-  * the staged edge leaf's measured bytes ([[Staging.loopShufflePartitions]],
-  * restored on exit): labels are one row per node — a sliver next to
-  * the edge pipeline — and wide shuffles pay pure task-scheduling
-  * overhead per round at fixture scale, while a fixed narrow width
-  * would cap the per-round edge aggregate's reducers at 100 TB. The
-  * driver holds only a per-round label-sum (convergence metric), never
-  * data.
-  *
-  * Convergence detection is join-free: labels only ever DECREASE
-  * (`least(old, …)` per node over a fixed node set), so the exact sum of
-  * all labels (DECIMAL(38,0) — overflow-proof at any scale) is strictly
-  * monotone decreasing until the fixpoint; an unchanged sum IS
-  * convergence. The sum rides a trivial aggregate over the just-staged
-  * blocks — not a second execution of the round, and not an accumulator
-  * (task-retry double-counting would make an accumulator sum unreliable
-  * on a real cluster).
+  * the node id, in the one job per round [[Fixpoint.iterate]] runs.
+  * Labels only ever DECREASE (`least(old, …)` per node over a fixed
+  * node set), so an unchanged exact label sum IS convergence.
   *
   * Failure safety at 100 TB: staging goes through [[Staging.stage]] —
   * executor-local checkpoints by default, reliable checkpoints under
@@ -53,16 +34,12 @@ import org.apache.spark.sql.types.DecimalType
   */
 object ConnectedComponents {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** @param edges two-column DataFrame of undirected edges
     * @return (id, component) — component = min node id reachable
     */
   def minLabel(edges: DataFrame, srcCol: String, dstCol: String,
       maxIterations: Int = 20): DataFrame = {
     val spark = edges.sparkSession
-    def now() = System.nanoTime()
-    def secs(t0: Long) = f"${(now() - t0) / 1e9}%.2f"
     // materialize the edge list ONCE: `edges` may be an arbitrarily
     // expensive upstream pipeline (e.g. the full near-dup Jaccard join),
     // and the loop references it every round — without staging it
@@ -70,112 +47,59 @@ object ConnectedComponents {
     // graph). Staged EAGERLY, at the session's shuffle width: the
     // upstream pipeline is the data-heavy part and should keep full
     // parallelism — only the label loop below narrows it.
-    val tSym = now()
     val sym = Staging.stage(
       edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
         .unionByName(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
         .distinct(),
       eager = true)
-    log.info(s"cc: edge staging ${secs(tSym)}s")
     // The label loop runs over a NODE table (tiny next to the edge
     // pipeline: one row per document, a few MB even when the corpus is
     // TBs). At the session's 32 shuffle partitions every round pays
     // 32-task scheduling per exchange for slivers of data — measured as
     // the dominant q74 cost on the driver (round-4 VERDICT #2). The
     // width is derived from the staged edge leaf's measured size
-    // (floor 8 at fixture scale — the r4-measured sweet spot; grows
-    // linearly with the data at 100x), scoped to the loop and restored
-    // — the caller's downstream plan keeps the session default. AQE may
-    // coalesce further below the chosen width.
-    // width derived from the staged edge leaf's measured bytes, not a
-    // constant: the per-round neighbor join/aggregate is edge-sized,
-    // and 8 reducers at 100 TB would be the one local-mode assumption
-    // left in the loop (r14 verdict #1; guide §2.1/§2.2); AQE is
-    // scope-disabled only in sliver mode (see Staging.withLoopShuffle)
+    // instead: the per-round neighbor join/aggregate is edge-sized, so
+    // a constant 8 reducers would not scale to 100 TB.
     Staging.withLoopShuffle(spark, sym) {
-      // coalesce: sum over an EMPTY label set (no edges) is NULL, and the
-      // convergence compare must still terminate
-      val sumCol = coalesce(sum(col("component").cast(DecimalType(38, 0))),
-        lit(0).cast(DecimalType(38, 0)))
-      // LAZY staging + one aggregate: the first action over the staged
-      // frame materializes its blocks AND computes the convergence sum in
-      // the SAME job. Eager staging ran two jobs per round (materialize,
-      // then sum); per-round fixed job cost is exactly what made q74
-      // 3x slower on the driver than the data volume justifies.
-      val tInit = now()
-      var labels = Staging.stage(
-        sym.select(col("a").as("id")).distinct()
+      val (labels, _) = Fixpoint.iterate("ConnectedComponents",
+        init = sym.select(col("a").as("id")).distinct()
           .withColumn("component", col("id")),
-        eager = false)
-      // same job also counts the node sliver: the count feeds
-      // stageWithStats below so every round's edge-side join sees a
-      // real size estimate (a bare staged LogicalRDD defaults to an
-      // unbounded one and the per-round neighbor join degrades to a
-      // sort-merge plan that re-exchanges the edge leaf every round)
-      val initRow = labels.agg(sumCol, count(lit(1))).head()
-      var prevSum = initRow.getDecimal(0)
-      val nodeN = initRow.getLong(1)
-      labels = org.apache.spark.sql.GraftSqlBridge
-        .withKnownStats(labels, nodeN)
-      log.info(s"cc: label init ${secs(tInit)}s (n=$nodeN)")
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIterations) {
-        val tRound = now()
-        // Union formulation: component_next(id) = min over three label
-        // CANDIDATE streams, folded by ONE partial-aggregable groupBy —
-        //   own:      (id, my label)
-        //   neighbor: (id, label of each neighbor)    [1 equi-join]
-        //   hop:      (id, label of my label)         [1 equi-join, i>=2]
-        // Identical semantics to least(own, neighborMin, labelOfLabel),
-        // but the old left-join that re-attached neighborMin to labels —
-        // a full extra exchange of the label table per round — is gone:
-        // the union feeds the min-aggregate directly and map-side partial
-        // aggregation collapses candidates before the single exchange.
-        // pointer jumping: the hop stream shortcuts chains so rounds
-        // scale with log(diameter), not diameter. Enabled only from
-        // round 3: near-dup graphs are overwhelmingly diameter-≤3 stars
-        // that converge on plain propagation, and the hop probe per
-        // round would be pure overhead there; a graph still unconverged
-        // by round 3 is exactly the deep-chain case the shortcut exists
-        // for. Inner join is safe: every component value IS a node id
-        // present in labels (labels start as id=component and only
-        // adopt other nodes' ids). Neighbor and hop streams share ONE
-        // probe union into a single label join (the union is exchange-
-        // free), so a round plans one join instead of two — identical
-        // candidate multiset, half the per-round operators.
-        val probes =
-          if (i < 2) sym.select(col("b").as("__k"), col("a").as("__o"))
-          else sym.select(col("b").as("__k"), col("a").as("__o"))
-            .unionByName(labels.select(col("component").as("__k"),
-              col("id").as("__o")))
-        val candidates = labels.unionByName(
-          probes.join(labels, col("__k") === col("id"))
-            .select(col("__o").as("id"), col("component")))
-        val next = Staging.stageWithStats(
-          candidates.groupBy(col("id"))
-            .agg(min(col("component")).as("component")),
-          nodeN, eager = false)
-        // one action per round: computes the round's joins, persists the
-        // staged blocks as a side effect of that same computation, and
-        // returns the convergence sum
-        val nextSum = next.agg(sumCol).head().getDecimal(0)
-        Staging.release(labels) // previous round's blocks
-        labels = next
-        converged = nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
-        i += 1
-        log.info(s"cc: round $i ${secs(tRound)}s (converged=$converged)")
-      }
+        step = (labels, _, i) => {
+          // Union formulation: component_next(id) = min over three
+          // label CANDIDATE streams, folded by ONE partial-aggregable
+          // groupBy —
+          //   own:      (id, my label)
+          //   neighbor: (id, label of each neighbor)    [1 equi-join]
+          //   hop:      (id, label of my label)         [same join, i>=2]
+          // Identical semantics to least(own, neighborMin,
+          // labelOfLabel); the union feeds the min-aggregate directly
+          // and map-side partial aggregation collapses candidates before
+          // the single exchange.
+          // pointer jumping: the hop stream shortcuts chains so rounds
+          // scale with log(diameter), not diameter. Enabled only from
+          // round 3: near-dup graphs are overwhelmingly diameter-≤3
+          // stars that converge on plain propagation, and the hop probe
+          // per round would be pure overhead there; a graph still
+          // unconverged by round 3 is exactly the deep-chain case the
+          // shortcut exists for. Inner join is safe: every component
+          // value IS a node id present in labels (labels start as
+          // id=component and only adopt other nodes' ids). Neighbor and
+          // hop streams share ONE probe union into a single label join
+          // (the union is exchange-free).
+          val probes =
+            if (i < 2) sym.select(col("b").as("__k"), col("a").as("__o"))
+            else sym.select(col("b").as("__k"), col("a").as("__o"))
+              .unionByName(labels.select(col("component").as("__k"),
+                col("id").as("__o")))
+          labels.unionByName(
+              probes.join(labels, col("__k") === col("id"))
+                .select(col("__o").as("id"), col("component")))
+            .groupBy(col("id")).agg(min(col("component")).as("component"))
+        },
+        probe = Seq(Fixpoint.exactSum(col("component"))),
+        converged = Some(Fixpoint.sumUnchanged),
+        maxRounds = maxIterations)
       Staging.release(sym)
-      log.info(s"connected components converged in $i rounds " +
-        s"(maxIterations=$maxIterations)")
-      // silent truncation would return WRONG labels with no signal —
-      // diameter-heavy graphs must fail loudly, not corrupt downstream
-      if (!converged)
-        throw new IllegalStateException(
-          s"connected components did not converge within $maxIterations " +
-            "iterations; raise maxIterations (graph diameter exceeds it)")
       labels
     }
   }

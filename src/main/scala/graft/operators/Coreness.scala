@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Core-number (k-core) decomposition by iterated neighborhood
   * H-indices (Lü, Chen, Zhang, Zhou & Stanley, "The H-index of a
@@ -33,17 +32,9 @@ import org.apache.spark.sql.types.DecimalType
   * unrolled rounds past the fixed point are provably no-ops because
   * the fixed point is stable).
   *
-  * Loop discipline mirrors [[ConnectedComponents]]/[[LabelProp]]: the
-  * symmetrized edge list is staged EAGERLY once, the value table is a
-  * one-row-per-node sliver staged LAZILY per round with its known row
-  * count ([[Staging.stageWithStats]]) so Catalyst broadcasts it into
-  * the edge join while it fits and flips to a shuffled join at scale;
-  * the loop narrows shuffle width (values are a sliver next to the
-  * edge pipeline) and restores it on exit. Convergence detection is
-  * join-free: values only ever DECREASE, so the exact DECIMAL(38,0)
-  * sum of all values is strictly monotone until the fixed point — an
-  * unchanged sum IS convergence (the [[ConnectedComponents]] trick;
-  * never an accumulator, which task retries would double-count).
+  * The symmetrized edge list is staged EAGERLY once; the value table
+  * is the state of a [[Fixpoint.iterate]] loop. Values only ever
+  * DECREASE, so an unchanged exact value sum IS convergence.
   *
   * Per-round cost at 100 TB: the only edge-sized stages are the value
   * join and the per-node sort window (both key-partitioned and
@@ -53,12 +44,10 @@ import org.apache.spark.sql.types.DecimalType
   * diameter-LIKE, not degeneracy-bounded: on a long path the endpoint
   * 1-values propagate inward one hop per round (~n/2 rounds), so
   * capacity planning should budget O(diameter) rounds. maxIterations
-  * defaults generously for that reason; exceeding it fails loudly
-  * (require), never silently returns a non-fixed-point.
+  * defaults generously for that reason; exceeding it fails loudly,
+  * never silently returns a non-fixed-point.
   */
 object Coreness {
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** @param edges DataFrame holding one row per directed edge; pass an
     *              already-symmetrized list for an undirected graph
@@ -72,62 +61,36 @@ object Coreness {
   def run(edges: DataFrame, srcCol: String, dstCol: String,
       maxIterations: Int = 200): DataFrame = {
     val spark = edges.sparkSession
-    def now() = System.nanoTime()
-    def secs(t0: Long) = f"${(now() - t0) / 1e9}%.2f"
-
-    val tEdges = now()
     val e = Staging.stage(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct(),
       eager = true)
-    val n = e.select(countDistinct(col("src"))).head().getLong(0)
-    log.info(s"coreness: edge staging ${secs(tEdges)}s (n=$n)")
-
-    // data-proportional loop width + sliver-mode AQE scope
     Staging.withLoopShuffle(spark, e) {
-      val sumCol = coalesce(sum(col("v").cast(DecimalType(38, 0))),
-        lit(0).cast(DecimalType(38, 0)))
-      // v0 = degree (every node in a symmetrized edge list appears as
-      // src, so the degree groupBy IS the node table)
-      var vals = Staging.stageWithStats(
-        e.groupBy(col("src").as("id")).agg(count(lit(1)).as("v")),
-        n, eager = false)
-      var prevSum = vals.agg(sumCol).head().getDecimal(0)
       val wDesc = Window.partitionBy(col("node")).orderBy(col("nv").desc)
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIterations) {
-        val tRound = now()
+      val (vals, _) = Fixpoint.iterate("Coreness",
+        // v0 = degree (every node in a symmetrized edge list appears as
+        // src, so the degree groupBy IS the node table)
+        init = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("v")),
         // H-index of the neighbor multiset, over the per-node VALUE
-        // HISTOGRAM instead of the raw neighbor list: for ranks
-        // a..cum of a distinct value v (descending order), max over
-        // the group of min(rank, v) is min(cum, v) — so
-        // h = max over distinct values of min(cumcount, v),
-        // bit-identical to ranking every neighbor row. The first
-        // aggregate partial-aggregates map-side, so the window's
-        // exchange and sort carry one row per (node, DISTINCT value)
-        // — values contract toward small cores as rounds proceed —
-        // instead of one row per neighbor (guide §2.3). Values are
-        // distinct per node after the groupBy, so the ordered
-        // window's RANGE frame equals ROWS.
-        val next = Staging.stageWithStats(
-          e.join(vals, col("dst") === col("id"))
-            .select(col("src").as("node"), col("v").as("nv"))
-            .groupBy(col("node"), col("nv"))
-            .agg(count(lit(1)).as("cnt"))
-            .withColumn("cum", sum(col("cnt")).over(wDesc))
-            .groupBy(col("node").as("id"))
-            .agg(max(least(col("cum"), col("nv"))).as("v")),
-          n, eager = false)
-        val s = next.agg(sumCol).head().getDecimal(0)
-        Staging.release(vals)
-        vals = next
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
-        i += 1
-        log.info(s"coreness: round $i ${secs(tRound)}s (sum=$s)")
-      }
-      require(converged,
-        s"coreness did not converge in $maxIterations rounds")
+        // HISTOGRAM instead of the raw neighbor list: for ranks a..cum
+        // of a distinct value v (descending order), max over the group
+        // of min(rank, v) is min(cum, v) — so h = max over distinct
+        // values of min(cumcount, v), bit-identical to ranking every
+        // neighbor row. The first aggregate partial-aggregates
+        // map-side, so the window's exchange and sort carry one row per
+        // (node, DISTINCT value) — values contract toward small cores
+        // as rounds proceed — instead of one row per neighbor (guide
+        // §2.3). Values are distinct per node after the groupBy, so the
+        // ordered window's RANGE frame equals ROWS.
+        step = (vals, _, _) => e.join(vals, col("dst") === col("id"))
+          .select(col("src").as("node"), col("v").as("nv"))
+          .groupBy(col("node"), col("nv"))
+          .agg(count(lit(1)).as("cnt"))
+          .withColumn("cum", sum(col("cnt")).over(wDesc))
+          .groupBy(col("node").as("id"))
+          .agg(max(least(col("cum"), col("nv"))).as("v")),
+        probe = Seq(Fixpoint.exactSum(col("v"))),
+        converged = Some(Fixpoint.sumUnchanged),
+        maxRounds = maxIterations)
       Staging.release(e)
       vals.select(col("id"), col("v").as("core"))
     }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Multi-source BFS hop distance — shortest unweighted path length
   * from a SEED SET to every node, by synchronous min-plus relaxation:
@@ -25,18 +24,13 @@ import org.apache.spark.sql.types.DecimalType
   * Rounds to converge = eccentricity of the seed set, small on the
   * short-diameter graphs curation pipelines build.
   *
-  * Loop discipline mirrors [[Coreness]]: edges staged eagerly once,
-  * the (id, dist) sliver staged lazily per round with its known row
-  * count so Catalyst broadcasts it while small and shuffles it at
-  * scale; shuffle width narrowed for the sliver loop and restored.
-  * Convergence is join-free: the DECIMAL(38,0) sum of
-  * coalesce(dist, n + 1) is strictly monotone decreasing until the
+  * Edges are staged eagerly once; the (id, dist) table is the state of
+  * a [[Fixpoint.iterate]] loop. Convergence is join-free: the exact sum
+  * of coalesce(dist, n + 1) is strictly monotone decreasing until the
   * fixed point (a NULL→k settle and a k→k' improvement both decrease
   * it), so an unchanged sum IS convergence.
   */
 object HopDistance {
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** @param edges directed edges; symmetrize upstream for undirected.
     * @param seeds one-column DataFrame of seed node ids (distance 0).
@@ -49,10 +43,6 @@ object HopDistance {
       seeds: DataFrame, seedCol: String,
       maxIterations: Int = 50): DataFrame = {
     val spark = edges.sparkSession
-    def now() = System.nanoTime()
-    def secs(t0: Long) = f"${(now() - t0) / 1e9}%.2f"
-
-    val tEdges = now()
     val e = Staging.stage(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct(),
       eager = true)
@@ -61,54 +51,34 @@ object HopDistance {
         .unionByName(e.select(col("dst").as("id"))).distinct(),
       eager = true)
     val n = nodes.count()
-    log.info(s"hopdist: edge/node staging ${secs(tEdges)}s (n=$n)")
-
-    // data-proportional loop width + sliver-mode AQE scope
     Staging.withLoopShuffle(spark, e) {
-      // settle metric: sum of coalesce(dist, n+1) — monotone decreasing
-      // to the fixed point; n+1 exceeds any reachable distance
-      val sumCol = coalesce(
-        sum(coalesce(col("dist"), lit(n + 1)).cast(DecimalType(38, 0))),
-        lit(0).cast(DecimalType(38, 0)))
-      var d = Staging.stageWithStats(
-        nodes.join(seeds.select(col(seedCol).as("sid")).distinct(),
+      val (d, _) = Fixpoint.iterate("HopDistance",
+        init = nodes.join(seeds.select(col(seedCol).as("sid")).distinct(),
             col("id") === col("sid"), "left_outer")
           .select(col("id"),
             when(col("sid").isNotNull, lit(0L)).as("dist")),
-        n, eager = false)
-      var prevSum = d.agg(sumCol).head().getDecimal(0)
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIterations) {
-        val tRound = now()
         // frontier relaxation: min over in-neighbors' settled distances
-        val relax = e.join(d.filter(col("dist").isNotNull),
-            col("src") === col("id"))
-          .groupBy(col("dst")).agg((min(col("dist")) + 1).as("md"))
-        val next = Staging.stageWithStats(
-          d.join(relax, col("id") === col("dst"), "left_outer")
-            .select(col("id"),
-              // explicit CASE (not least()): NULL-skipping least()
-              // semantics differ across engines, and the oracle must
-              // replay this line exactly
-              when(col("dist").isNull, col("md"))
-                .otherwise(when(col("md") < col("dist"), col("md"))
-                  .otherwise(col("dist"))).as("dist")),
-          n, eager = false)
-        val s = next.agg(sumCol).head().getDecimal(0)
-        Staging.release(d)
-        d = next
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
-        i += 1
-        log.info(s"hopdist: round $i ${secs(tRound)}s (sum=$s)")
-      }
-      require(converged,
-        s"hop distance did not converge in $maxIterations rounds")
+        step = (d, _, _) => d
+          .join(e.join(d.filter(col("dist").isNotNull),
+              col("src") === col("id"))
+            .groupBy(col("dst")).agg((min(col("dist")) + 1).as("md")),
+            col("id") === col("dst"), "left_outer")
+          .select(col("id"), relaxed),
+        // settle metric: n+1 exceeds any reachable distance
+        probe = Seq(Fixpoint.exactSum(coalesce(col("dist"), lit(n + 1)))),
+        converged = Some(Fixpoint.sumUnchanged),
+        maxRounds = maxIterations)
       Staging.release(e); Staging.release(nodes)
       d
     }
   }
+
+  /** min(dist, md) with NULL as "unknown". An explicit CASE, not
+    * least(): NULL-skipping least() semantics differ across engines,
+    * and the oracle must replay this line exactly. */
+  private val relaxed = when(col("dist").isNull, col("md"))
+    .otherwise(when(col("md") < col("dist"), col("md"))
+      .otherwise(col("dist"))).as("dist")
 
   /** Incremental hop-distance MAINTENANCE under edge INSERTIONS — the
     * q307 (incremental CC) shape on shortest paths: yesterday's
@@ -167,19 +137,17 @@ object HopDistance {
       .join(standing.select(col("id").as("sid")),
         col("id") === col("sid"), "left_anti")
       .select(col("id"), lit(null).cast("long").as("dist"))
-    // data-proportional loop width + sliver-mode AQE scope
     Staging.withLoopShuffle(spark, e, de) {
-      // one staged frame per round: (id, dist, imp) — imp marks the
-      // frontier (rows improved last round); a single count() action
-      // materializes the round AND sizes the frontier. Seeds (when
-      // given) are pinned to dist 0 up front; a seed whose standing
-      // distance was NULL or positive is itself an improvement and
-      // joins the initial frontier.
+      // the state is (id, dist, imp) — imp marks the frontier (rows
+      // improved last round), and the round's one action sizes it.
+      // Seeds (when given) are pinned to dist 0 up front; a seed whose
+      // standing distance was NULL or positive is itself an
+      // improvement and joins the initial frontier.
       val base = standing
         .select(col("id"), col("dist").cast("long").as("dist"))
         .unionByName(newNodes)
-      var d = Staging.stage(
-        seeds match {
+      val (d, _) = Fixpoint.iterate("HopDistance.incremental",
+        init = seeds match {
           case Some(s) =>
             base.join(
                 s.select(col(seedCol).as("__seed")).distinct(),
@@ -191,50 +159,36 @@ object HopDistance {
                   (col("dist").isNull || col("dist") > 0)).as("imp"))
           case None => base.withColumn("imp", lit(false))
         },
-        eager = true)
-      val n = d.count()
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIterations) {
-        // round 0 relaxes across the delta edges (plus the corpus
-        // edges leaving seed-pinned frontier nodes, when seeds were
-        // given — with no seeds the initial frontier is empty and
-        // round 0 is exactly the delta); later rounds relax the staged
-        // full-edge leaf restricted to the frontier — a delta-bounded
-        // sliver probing the standing index
-        val frontierEdges =
-          e.join(d.filter(col("imp")).select(col("id").as("fid")),
-              col("src") === col("fid"))
-            .select(col("src"), col("dst"))
-        val relaxFrom =
-          if (i == 0) de.select(col("src"), col("dst"))
-            .unionByName(frontierEdges)
-          else frontierEdges
-        val cand = relaxFrom
-          .join(d.filter(col("dist").isNotNull)
-              .select(col("id").as("sid"), col("dist").as("sd")),
-            col("src") === col("sid"))
-          .groupBy(col("dst")).agg((min(col("sd")) + 1).as("md"))
-        val next = Staging.stageWithStats(
+        step = (d, _, i) => {
+          // round 0 relaxes across the delta edges (plus the corpus
+          // edges leaving seed-pinned frontier nodes, when seeds were
+          // given — with no seeds the initial frontier is empty and
+          // round 0 is exactly the delta); later rounds relax the
+          // staged full-edge leaf restricted to the frontier — a
+          // delta-bounded sliver probing the standing index
+          val frontierEdges =
+            e.join(d.filter(col("imp")).select(col("id").as("fid")),
+                col("src") === col("fid"))
+              .select(col("src"), col("dst"))
+          val relaxFrom =
+            if (i == 0) de.select(col("src"), col("dst"))
+              .unionByName(frontierEdges)
+            else frontierEdges
+          val cand = relaxFrom
+            .join(d.filter(col("dist").isNotNull)
+                .select(col("id").as("sid"), col("dist").as("sd")),
+              col("src") === col("sid"))
+            .groupBy(col("dst")).agg((min(col("sd")) + 1).as("md"))
           d.select(col("id"), col("dist"))
             .join(cand, col("id") === col("dst"), "left_outer")
-            .select(col("id"),
-              when(col("dist").isNull, col("md"))
-                .otherwise(when(col("md") < col("dist"), col("md"))
-                  .otherwise(col("dist"))).as("dist"),
+            .select(col("id"), relaxed,
               (col("md").isNotNull &&
                 (col("dist").isNull || col("md") < col("dist")))
-                .as("imp")),
-          n, eager = false)
-        val fCount = next.filter(col("imp")).count()
-        Staging.release(d)
-        d = next
-        converged = fCount == 0
-        i += 1
-        log.info(s"hopdist-inc: round $i frontier=$fCount")
-      }
-      require(converged,
-        s"incremental hop distance did not converge in $maxIterations")
+                .as("imp"))
+        },
+        probe = Seq(count(when(col("imp"), 1))),
+        converged = Some((_, cur) => cur.getLong(0) == 0),
+        maxRounds = maxIterations)
       Staging.release(e); Staging.release(de)
       d.select(col("id"), col("dist"))
     }

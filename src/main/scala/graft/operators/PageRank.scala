@@ -14,18 +14,11 @@ import org.apache.spark.sql.functions._
   * inflow is an order-dependent FP sum). Floor loss is ≤ 1 ppm per
   * in-edge per round, indistinguishable next to tolPpm.
   *
-  * Loop discipline mirrors [[ConnectedComponents]]: the edge+strength
-  * frame is staged EAGERLY once (arbitrary upstream cost), the rank
-  * table is staged LAZILY per round so the convergence aggregate's
-  * action materializes blocks and computes the delta in ONE job, the
-  * previous round's blocks are released as soon as the next is up,
-  * the loop narrows shuffle width (rank table = one row per node, a
-  * sliver next to the edges), and non-convergence throws instead of
-  * returning silently-wrong ranks. Dangling mass (nodes with no
-  * out-edges) is redistributed uniformly each round, which costs the
-  * round a second, trivial aggregate over the already-staged rank
-  * blocks — the scalar is an INPUT to the round, so it cannot fold
-  * into the round's own action.
+  * The edge+strength frame is staged EAGERLY once (arbitrary upstream
+  * cost); the rank table is the state of a [[Fixpoint.iterate]] loop,
+  * and non-convergence throws instead of returning silently-wrong
+  * ranks. Dangling mass (nodes with no out-edges) is redistributed
+  * uniformly each round; its total rides the round's one action.
   *
   * Scale notes (100 TB): the per-round joins shuffle on src then on
   * id — the canonical two-exchange PR step; only (id, rank) rows move
@@ -36,15 +29,8 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** One uniform share, in ppm. */
   val Ppm = 1000000L
-
-  /** Broadcast the per-round rank table into the edge join when the
-    * graph has at most this many nodes (~16 bytes/row -> <=16 MB
-    * broadcast at the limit). */
-  val BroadcastNodeLimit = 1000000L
 
   /** @param edges   directed weighted edges (positive weights)
     * @param dampingPct damping factor in percent (classic 85)
@@ -62,120 +48,92 @@ object PageRank {
     require(dampingPct > 0 && dampingPct < 100,
       s"dampingPct ($dampingPct) must be in (0, 100)")
     val spark = edges.sparkSession
-    def now() = System.nanoTime()
-    def secs(t0: Long) = f"${(now() - t0) / 1e9}%.2f"
-
-    val tEdges = now()
-    // the raw edge projection is staged FIRST: `edges` may be an
-    // arbitrarily expensive upstream pipeline (q262's is a corpus
-    // join+groupBy), and it used to be referenced three times — both
-    // sides of the out-strength self-join plus the node derivation —
-    // re-executing the pipeline each time. One eager staging, then
-    // every derivation reads the staged blocks.
-    val e = Staging.stage(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).cast("long").as("w")),
-      eager = true)
-    // (src, dst, w, tw): weights plus per-src out-strength, staged once
-    // at full session width — this is the data-heavy frame of the loop
-    val ew = Staging.stage(
-      e.join(e.groupBy(col("src")).agg(sum(col("w")).as("tw")), "src"),
-      eager = true)
-    val nodes = Staging.stage(
-      e.select(col("src").as("id"))
-        .unionByName(e.select(col("dst").as("id"))).distinct(),
-      eager = true)
-    Staging.release(e)
+    val (ew, nodes) = stageGraph(edges, srcCol, dstCol, wCol)
     val n = nodes.count()
-    // dangling = nodes with no out-edges; their mass redistributes
-    // uniformly each round (dropping it instead would leak total mass
-    // and understate every rank)
-    val dangling = Staging.stage(
-      nodes.join(ew.select(col("src").as("id")).distinct(),
-        Seq("id"), "left_anti"),
-      eager = true)
-    log.info(s"pagerank: edge/node staging ${secs(tEdges)}s (n=$n)")
-
     // width from the staged edge+strength frame's measured bytes: the
     // per-round contribution aggregate's map side is edge-sized, and
     // its reducer count must scale with the graph, not sit at a
-    // local-mode constant (r14 verdict #1; guide §2.1/§2.2); AQE is
-    // scope-disabled only in sliver mode (see Staging.withLoopShuffle)
+    // local-mode constant
     Staging.withLoopShuffle(spark, ew) {
       val base = (100L - dampingPct) * Ppm / 100L
-      // the dangling flag rides the rank table so each round's single
-      // convergence action can ALSO return the next round's dangling
-      // mass — the separate per-round dangling aggregate (a second
-      // Spark job per round) folds away; round 0's mass is dangCount
-      // × Ppm by construction (every rank starts at Ppm)
-      val dangN = dangling.count()
-      var ranks = Staging.stage(
-        nodes.join(dangling.select(col("id").as("__dg")),
-            col("id") === col("__dg"), "left_outer")
-          .select(col("id"), lit(Ppm).as("r"),
-            col("__dg").isNotNull.as("isd")),
-        eager = false)
-      // materialize round-0 blocks (the delta aggregate needs a prior)
-      ranks.count()
-      var dangSum = dangN * Ppm
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIterations) {
-        val tRound = now()
-        val dangShare = dangSum / math.max(n, 1L)
-        // exact floor(r*w/tw) without forming r*w (overflow headroom).
-        // The rank table is one (id, r) row per node — when the node
-        // count is broadcastable, hint it so the EDGE leaf (the frame
-        // that is actually big) is never shuffled per round: a staged
-        // LogicalRDD has no size stats, so without the hint Catalyst
-        // plans a sort-merge join that re-exchanges the edges every
-        // round. At sf-fixture sizes both plans cost about the same
-        // (8 shuffle partitions, edges ~1M rows); the hint is for the
-        // 100x graph, where re-shuffling the edge leaf R times is the
-        // dominant cost. Above the threshold the shuffled join is the
-        // correct plan: at 1e9 nodes the rank sliver no longer fits
-        // an executor.
-        val rankSide =
-          if (n <= BroadcastNodeLimit) broadcast(ranks) else ranks
-        val contrib = ew.join(rankSide, col("src") === col("id"))
-          .select(col("dst"),
-            expr("(r DIV tw) * w + ((r % tw) * w) DIV tw").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-        val next = Staging.stage(
+      // r_prev rides the rank table so the round's one action can
+      // return the max delta; the dangling flag rides it so the same
+      // action ALSO returns the next round's dangling mass (round 0's
+      // is dangling count × Ppm: every rank starts at Ppm)
+      val (ranks, _) = Fixpoint.iterate("PageRank",
+        init = withDangling(nodes, ew)
+          .select(col("id"), col("isd"), lit(Ppm).as("r_prev"),
+            lit(Ppm).as("r")),
+        step = (ranks, row, _) => {
+          val dangShare = row.getLong(1) / math.max(n, 1L)
           ranks.select(col("id"), col("isd"), col("r").as("r_prev"))
-            .join(contrib, col("id") === col("dst"), "left_outer")
+            .join(inflow(ew, ranks), col("id") === col("dst"),
+              "left_outer")
             .select(col("id"), col("isd"), col("r_prev"),
               coalesce(col("inflow"), lit(0L)).as("inf0"))
             .select(col("id"), col("isd"), col("r_prev"),
               (lit(base) +
                 expr(s"($dampingPct * (inf0 + $dangShare)) DIV 100"))
-                .as("r")),
-          eager = false)
-        // ONE action: materializes the round, returns the max delta
-        // AND the next round's dangling mass
-        val row = next
-          .agg(coalesce(max(abs(col("r") - col("r_prev"))), lit(0L)),
-            coalesce(sum(when(col("isd"), col("r"))), lit(0L)))
-          .head()
-        val maxDelta = row.getLong(0)
-        dangSum = row.getLong(1)
-        Staging.release(ranks)
-        ranks = next
-        converged = tolPpm >= 0 && maxDelta <= tolPpm
-        i += 1
-        log.info(s"pagerank: round $i ${secs(tRound)}s " +
-          s"maxDelta=${maxDelta}ppm (converged=$converged)")
-      }
-      Staging.release(ew); Staging.release(nodes); Staging.release(dangling)
-      if (!converged && tolPpm >= 0)
-        throw new IllegalStateException(
-          s"pagerank did not converge within $maxIterations iterations " +
-            s"(tolPpm=$tolPpm); raise maxIterations or loosen tolPpm")
-      if (tolPpm >= 0) log.info(s"pagerank converged in $i rounds")
-      else log.info(s"pagerank completed $i fixed rounds")
+                .as("r"))
+        },
+        probe = Seq(coalesce(max(abs(col("r") - col("r_prev"))), lit(0L)),
+          dangMass),
+        converged =
+          if (tolPpm >= 0) Some((_, cur) => cur.getLong(0) <= tolPpm)
+          else None,
+        maxRounds = maxIterations)
+      Staging.release(ew); Staging.release(nodes)
       ranks.select(col("id"), col("r").as("rank_ppm"))
     }
   }
+
+  /** (src, dst, w, tw) — weights plus per-src out-strength, staged
+    * eagerly at full session width (the data-heavy frame of the loop)
+    * — and the node table `nodes` (id, plus whatever columns
+    * `nodeCols` adds), staged eagerly. The raw edge projection is
+    * staged FIRST: `edges` may be an arbitrarily expensive upstream
+    * pipeline (q262's is a corpus join+groupBy) that both sides of the
+    * out-strength self-join and the node derivation would otherwise
+    * re-execute. */
+  private def stageGraph(edges: DataFrame, srcCol: String, dstCol: String,
+      wCol: String, nodeCols: DataFrame => DataFrame = identity)
+      : (DataFrame, DataFrame) = {
+    val e = Staging.stage(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+        col(wCol).cast("long").as("w")),
+      eager = true)
+    val ew = Staging.stage(
+      e.join(e.groupBy(col("src")).agg(sum(col("w")).as("tw")), "src"),
+      eager = true)
+    val nodes = Staging.stage(
+      nodeCols(e.select(col("src").as("id"))
+        .unionByName(e.select(col("dst").as("id"))).distinct()),
+      eager = true)
+    Staging.release(e)
+    (ew, nodes)
+  }
+
+  /** `nodes` plus `isd`: the node has no out-edges (dangling). Dangling
+    * mass is redistributed each round — dropping it would leak total
+    * mass and understate every rank. */
+  private def withDangling(nodes: DataFrame, ew: DataFrame): DataFrame =
+    nodes.join(ew.select(col("src").as("__s")).distinct(),
+        col("id") === col("__s"), "left_outer")
+      .withColumn("isd", col("__s").isNull).drop("__s")
+
+  /** Total rank held by dangling nodes. */
+  private val dangMass = coalesce(sum(when(col("isd"), col("r"))), lit(0L))
+
+  /** (dst, inflow): rank flowing along each edge, as exact
+    * floor(r*w/tw) without forming r*w (overflow headroom). The rank
+    * table carries its node count as statistics, so Catalyst
+    * broadcasts it into the edge join while it fits and shuffles it at
+    * scale. */
+  private def inflow(ew: DataFrame, ranks: DataFrame): DataFrame =
+    ew.join(ranks, col("src") === col("id"))
+      .select(col("dst"),
+        expr("(r DIV tw) * w + ((r % tw) * w) DIV tw").as("c"))
+      .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
 
   /** Personalized PageRank (PPR): the teleport distribution
     * concentrates on `seeds` instead of all nodes — the "affinity to
@@ -194,9 +152,7 @@ object PageRank {
     * standard PPR convention; dropping dangling mass would leak it,
     * sending it uniform would dilute personalization). The inflow
     * product uses the same overflow-safe floor(r·w/tw) decomposition
-    * as [[run]]. Loop discipline identical: staged edge leaf, lazy
-    * per-round rank staging + release, broadcast rank sliver below
-    * [[BroadcastNodeLimit]].
+    * as [[run]], in the same loop.
     */
   def runPersonalized(edges: DataFrame, srcCol: String, dstCol: String,
       wCol: String, seeds: DataFrame, seedCol: String,
@@ -205,81 +161,42 @@ object PageRank {
     require(dampingPct > 0 && dampingPct < 100,
       s"dampingPct ($dampingPct) must be in (0, 100)")
     val spark = edges.sparkSession
-    // staged once — the upstream pipeline was re-executed by the
-    // strength self-join and the node derivation (see run())
-    val e = Staging.stage(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).cast("long").as("w")),
-      eager = true)
-    val ew = Staging.stage(
-      e.join(e.groupBy(col("src")).agg(sum(col("w")).as("tw")), "src"),
-      eager = true)
     val seedIds = Staging.stage(
       seeds.select(col(seedCol).as("sid")).distinct(), eager = true)
-    val nodes = Staging.stage(
-      e.select(col("src").as("id"))
-        .unionByName(e.select(col("dst").as("id"))).distinct()
-        .join(seedIds, col("id") === col("sid"), "left_outer")
+    val (ew, nodes) = stageGraph(edges, srcCol, dstCol, wCol,
+      _.join(seedIds, col("id") === col("sid"), "left_outer")
         .select(col("id"),
-          when(col("sid").isNotNull, 1L).otherwise(0L).as("isSeed")),
-      eager = true)
-    Staging.release(e)
+          when(col("sid").isNotNull, 1L).otherwise(0L).as("isSeed")))
     val n = nodes.count()
     val sCnt = nodes.filter(col("isSeed") === 1L).count()
     require(sCnt > 0, "personalized pagerank needs >= 1 seed IN the graph")
-    val dangling = Staging.stage(
-      nodes.select(col("id"), col("isSeed"))
-        .join(ew.select(col("src").as("id")).distinct(),
-          Seq("id"), "left_anti"),
-      eager = true)
-    // data-proportional loop width + sliver-mode AQE scope
     Staging.withLoopShuffle(spark, ew) {
       val teleport = (100L - dampingPct) * n * Ppm / (100L * sCnt)
-      // dangling flag rides the rank table (run()'s device): the
-      // per-round materializing count doubles as the dangling-mass
-      // aggregate, folding the second per-round job away. Round 0's
-      // mass: dangling seeds hold n·Ppm DIV s each, others 0.
-      val dangSeedN = dangling.filter(col("isSeed") === 1L).count()
-      var ranks = Staging.stage(
-        nodes.join(dangling.select(col("id").as("__dg")),
-            col("id") === col("__dg"), "left_outer")
+      // the dangling flag rides the rank table: each round's one
+      // action returns the next round's dangling mass (round 0's:
+      // dangling seeds hold n·Ppm DIV s each, others 0)
+      val (ranks, _) = Fixpoint.iterate("PageRank.runPersonalized",
+        init = withDangling(nodes, ew)
           .select(col("id"), col("isSeed"),
             when(col("isSeed") === 1L, lit(n * Ppm / sCnt))
               .otherwise(lit(0L)).as("r"),
-            col("__dg").isNotNull.as("isd")),
-        eager = false)
-      ranks.count()
-      var dangSum = dangSeedN * (n * Ppm / sCnt)
-      var i = 0
-      while (i < rounds) {
-        val dangSeedShare = dangSum / sCnt
-        val rankSide =
-          if (n <= BroadcastNodeLimit) broadcast(ranks) else ranks
-        val contrib = ew.join(rankSide, col("src") === col("id"))
-          .select(col("dst"),
-            expr("(r DIV tw) * w + ((r % tw) * w) DIV tw").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-        val next = Staging.stage(
+            col("isd")),
+        step = (ranks, row, _) => {
+          val dangSeedShare = row.getLong(0) / sCnt
           ranks.select(col("id"), col("isSeed"), col("isd"))
-            .join(contrib, col("id") === col("dst"), "left_outer")
+            .join(inflow(ew, ranks), col("id") === col("dst"),
+              "left_outer")
             .select(col("id"), col("isSeed"), col("isd"),
               (when(col("isSeed") === 1L, lit(teleport)).otherwise(0L) +
                 expr(s"($dampingPct * (coalesce(inflow, 0L) + " +
                   s"if(isSeed = 1, ${dangSeedShare}L, 0L))) DIV 100")
-              ).as("r")),
-          eager = false)
-        // one action: materializes the round and returns the next
-        // round's dangling mass
-        dangSum = next
-          .agg(coalesce(sum(when(col("isd"), col("r"))), lit(0L)))
-          .head().getLong(0)
-        Staging.release(ranks)
-        ranks = next
-        i += 1
-        log.info(s"ppr: completed round $i")
-      }
+              ).as("r"))
+        },
+        probe = Seq(dangMass),
+        converged = None,
+        maxRounds = rounds)
       Staging.release(ew); Staging.release(nodes)
-      Staging.release(dangling); Staging.release(seedIds)
+      Staging.release(seedIds)
       ranks.select(col("id"), col("r").as("rank_ppm"))
     }
   }

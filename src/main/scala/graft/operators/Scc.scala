@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Strongly connected components of a DIRECTED graph by iterated
   * forward/backward min-label peeling — the deterministic multi-pivot
@@ -38,14 +37,10 @@ import org.apache.spark.sql.types.DecimalType
   * directed edges with the same pointer-jumping shortcut — and the
   * hop join stays SOUND under direction because reachability is
   * transitive: f(v) = m means v reaches m, f(m) = k means m reaches
-  * k, so k is a valid (reachable) candidate for v. Loop discipline
-  * mirrors the CC/coreness family: edge leaf staged eagerly per peel
-  * (restricted to active nodes — after the first peel it is
-  * residue-sized, not corpus-sized), label slivers staged lazily with
-  * known row counts ([[Staging.stageWithStats]]) so Catalyst makes
-  * the broadcast-vs-shuffle call itself, narrowed loop shuffle width,
-  * join-free convergence via the strictly-decreasing DECIMAL(38,0)
-  * label sum, per-round stage+release, driver holds sums/counts only.
+  * k, so k is a valid (reachable) candidate for v. The edge leaf is
+  * staged eagerly per peel (restricted to active nodes — after the
+  * first peel it is residue-sized, not corpus-sized); each peel's
+  * propagation is one [[Fixpoint.iterate]] loop.
   */
 object Scc {
 
@@ -71,81 +66,60 @@ object Scc {
     * converged table, which rides the SAME per-round convergence
     * action so the peel loop needs no separate count job). */
   private def minReachBoth(er: DataFrame, nodes: DataFrame,
-      nodeCount: Long, maxIterations: Int): (DataFrame, Long) = {
-    val dec = DecimalType(38, 0)
-    val sumCol = coalesce(
-      sum(col("f").cast(dec)) + sum(col("b").cast(dec)),
-      lit(0).cast(dec))
-    val doneCol = coalesce(
-      sum(when(col("f") === col("b"), 1L).otherwise(0L)), lit(0L))
+      maxIterations: Int): (DataFrame, Long) = {
     val idType = nodes.schema("id").dataType
     def nullId = lit(null).cast(idType)
-    var labels = Staging.stageWithStats(
-      nodes.select(col("id"), col("id").as("f"), col("id").as("b")),
-      nodeCount, eager = false)
-    var prevSum = labels.agg(sumCol).head().getDecimal(0)
-    var doneCnt = 0L
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIterations) {
-      // ONE direction-tagged edge probe serves both fixpoints (fwd
-      // candidates flow dst→src, bwd src→dst): the union is exchange-
-      // free, so a round plans 2 joins instead of 4 (with the hop
-      // fusion below) — these sliver-loop jobs are dominated by
-      // per-job plan/stage fixed cost at fixture scale, and the
-      // candidate multiset is IDENTICAL (when() tags the
-      // non-contributing side NULL exactly as the two separate
-      // projections did)
-      val eBoth = er
-        .select(col("dst").as("__k"), col("src").as("__o"),
-          lit(true).as("__isF"))
-        .unionByName(er.select(col("src").as("__k"),
-          col("dst").as("__o"), lit(false).as("__isF")))
-      val edgeCand = eBoth.join(labels, col("__k") === col("id"))
-        .select(col("__o").as("id"),
-          when(col("__isF"), col("f")).otherwise(nullId).as("f"),
-          when(!col("__isF"), col("b")).otherwise(nullId).as("b"))
-      val base = labels.unionByName(edgeCand)
-      // label-of-label path doubling, same fusion: one tagged probe
-      // of the label table against itself instead of two hop joins
-      val candidates =
-        if (i < 2) base
-        else {
-          val probes = labels
-            .select(col("f").as("__k"), col("id").as("__o"),
-              lit(true).as("__isF"))
-            .unionByName(labels.select(col("b").as("__k"),
-              col("id").as("__o"), lit(false).as("__isF")))
-          base.unionByName(probes
-            .join(labels.select(col("id").as("__k2"),
-              col("f").as("__f2"), col("b").as("__b2")),
-              col("__k") === col("__k2"))
-            .select(col("__o").as("id"),
-              when(col("__isF"), col("__f2")).otherwise(nullId).as("f"),
-              when(!col("__isF"), col("__b2")).otherwise(nullId)
-                .as("b")))
-        }
-      val next = Staging.stageWithStats(
+    val (labels, row) = Fixpoint.iterate("Scc",
+      init = nodes.select(col("id"), col("id").as("f"), col("id").as("b")),
+      step = (labels, _, i) => {
+        // ONE direction-tagged edge probe serves both fixpoints (fwd
+        // candidates flow dst→src, bwd src→dst): the union is exchange-
+        // free, so a round plans 2 joins instead of 4 (with the hop
+        // fusion below) — these sliver-loop jobs are dominated by
+        // per-job plan/stage fixed cost at fixture scale, and the
+        // candidate multiset is IDENTICAL (when() tags the
+        // non-contributing side NULL exactly as the two separate
+        // projections did)
+        val eBoth = er
+          .select(col("dst").as("__k"), col("src").as("__o"),
+            lit(true).as("__isF"))
+          .unionByName(er.select(col("src").as("__k"),
+            col("dst").as("__o"), lit(false).as("__isF")))
+        val edgeCand = eBoth.join(labels, col("__k") === col("id"))
+          .select(col("__o").as("id"),
+            when(col("__isF"), col("f")).otherwise(nullId).as("f"),
+            when(!col("__isF"), col("b")).otherwise(nullId).as("b"))
+        val base = labels.unionByName(edgeCand)
+        // label-of-label path doubling, same fusion: one tagged probe
+        // of the label table against itself instead of two hop joins
+        val candidates =
+          if (i < 2) base
+          else {
+            val probes = labels
+              .select(col("f").as("__k"), col("id").as("__o"),
+                lit(true).as("__isF"))
+              .unionByName(labels.select(col("b").as("__k"),
+                col("id").as("__o"), lit(false).as("__isF")))
+            base.unionByName(probes
+              .join(labels.select(col("id").as("__k2"),
+                col("f").as("__f2"), col("b").as("__b2")),
+                col("__k") === col("__k2"))
+              .select(col("__o").as("id"),
+                when(col("__isF"), col("__f2")).otherwise(nullId).as("f"),
+                when(!col("__isF"), col("__b2")).otherwise(nullId)
+                  .as("b")))
+          }
         candidates.groupBy(col("id"))
-          .agg(min(col("f")).as("f"), min(col("b")).as("b")),
-        nodeCount, eager = false)
-      // ONE action: materializes the round, returns the convergence
-      // sum AND the assigned count (free — same aggregate job)
-      val row = next.agg(sumCol, doneCol).head()
-      val s = row.getDecimal(0)
-      doneCnt = row.getLong(1)
-      Staging.release(labels)
-      labels = next
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      i += 1
-      log.info(s"scc: propagation round $i (sum=$s)")
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"directed min-label did not converge within $maxIterations " +
-          "rounds; raise maxIterations (reachability depth exceeds it)")
-    (labels, doneCnt)
+          .agg(min(col("f")).as("f"), min(col("b")).as("b"))
+      },
+      // the assigned count (f = b) rides the convergence action free
+      probe = Seq(
+        Fixpoint.exactSum(col("f")) + Fixpoint.exactSum(col("b")),
+        coalesce(sum(when(col("f") === col("b"), 1L).otherwise(0L)),
+          lit(0L))),
+      converged = Some(Fixpoint.sumUnchanged),
+      maxRounds = maxIterations)
+    (labels, row.getLong(1))
   }
 
   /** Condensation edge list for a labeled graph: one arc per pair of
@@ -495,10 +469,6 @@ object Scc {
       maxPeels: Int = 50, maxIterations: Int = 50,
       edgesClean: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
-    def now() = System.nanoTime()
-    def secs(t0: Long) = f"${(now() - t0) / 1e9}%.2f"
-
-    val tEdges = now()
     val renamed = edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val e = Staging.stage(
@@ -510,10 +480,6 @@ object Scc {
         .unionByName(e.select(col("dst").as("id"))).distinct(),
       eager = true)
     var activeN = active.count()
-    log.info(s"scc: edge/node staging ${secs(tEdges)}s (n=$activeN)")
-
-    // data-proportional loop width + sliver-mode AQE scope
-    // (see Staging.withLoopShuffle)
     Staging.withLoopShuffle(spark, e) {
       // assignments accumulate across peels as FILTERS over each
       // peel's staged fused label table — no per-peel staging job, no
@@ -528,7 +494,6 @@ object Scc {
       val totalN = activeN
       var peel = 0
       while (activeN > 0 && peel < maxPeels) {
-        val tPeel = now()
         // the induced subgraph on active nodes. On peel 1 active IS
         // every endpoint of e by construction, so the restriction is
         // the identity — skip the two joins and the corpus-sized
@@ -544,8 +509,7 @@ object Scc {
             eager = true)
         // both fixpoints in one loop; a node with f = b = m is in
         // SCC(m) — a filter on the fused label table, no join
-        val (fb, doneCnt) = minReachBoth(er, activeDf, activeN,
-          maxIterations)
+        val (fb, doneCnt) = minReachBoth(er, activeDf, maxIterations)
         // fb is materialized (its last convergence action ran), so the
         // induced edge leaf can release immediately
         if (!(er eq e)) Staging.release(er)
@@ -553,11 +517,10 @@ object Scc {
         assignedParts ::= fb.filter(col("f") === col("b"))
           .select(col("id"), col("f").as("scc"))
         activeDf = fb.filter(col("f") =!= col("b")).select(col("id"))
-        log.info(s"scc: peel ${peel + 1} ${secs(tPeel)}s " +
-          s"(assigned $doneCnt, remaining ${activeN - doneCnt})")
         activeN -= doneCnt
         peel += 1
       }
+      log.info(s"Scc: $peel peels over $totalN nodes")
       if (activeN > 0)
         throw new IllegalStateException(
           s"SCC did not finish within $maxPeels peel rounds " +

@@ -8,9 +8,10 @@ import graft.operators.Staging
   * loops pinned `shuffle.partitions=8`, a local-mode constant that
   * would cap the per-round edge-sized aggregates at 8 reducers at
   * 100 TB). [[Staging.loopShufflePartitions]] derives the width from
-  * the staged frames' MEASURED block bytes (driver-side read of the
-  * block manager — no extra Spark job): floor at fixture scale, linear
-  * in the data beyond one target block per partition.
+  * the staged frames' MEASURED bytes ([[Staging.stagedBytes]], a
+  * driver-side read — no extra Spark job) through the pure
+  * [[Staging.loopWidth]]: floor at fixture scale, linear in the data
+  * beyond one target block per partition.
   */
 class LoopPartitionsSpec extends SparkTestBase {
   import spark.implicits._
@@ -28,40 +29,28 @@ class LoopPartitionsSpec extends SparkTestBase {
 
   test("width grows linearly once frames exceed the target block") {
     val e = staged(50000)
-    val key = Staging.LoopTargetBytesKey
-    try {
-      // shrink the target so this small frame spans many "blocks":
-      // the width must scale with measured bytes / target
-      spark.conf.set(key, "4096")
-      val w4k = Staging.loopShufflePartitions(spark, e)
-      assert(w4k > Staging.LoopMinPartitions,
-        s"expected > floor at 4 KB target, got $w4k")
-      spark.conf.set(key, "2048")
-      val w2k = Staging.loopShufflePartitions(spark, e)
-      // halving the target must not shrink the width; it should about
-      // double (exact ratio depends on block rounding)
-      assert(w2k >= w4k * 3 / 2, s"expected ~2x of $w4k, got $w2k")
-    } finally spark.conf.unset(key)
+    val b = Staging.stagedBytes(spark, e)
+    assert(b > 0, "an eagerly staged frame must measure its bytes")
+    // the same frame at 100,000x and 200,000x its measured size: the
+    // width must scale with bytes / target, about doubling
+    val w1 = Staging.loopWidth(b * 100000)
+    val w2 = Staging.loopWidth(b * 200000)
+    assert(w1 > Staging.LoopMinPartitions,
+      s"expected > floor for ${b * 100000} bytes, got $w1")
+    assert(w2 >= w1 * 2 - 1 && w2 <= w1 * 2, s"expected ~2x of $w1, got $w2")
     Staging.release(e)
   }
 
-  test("unstaged frames contribute nothing (floor width, no crash)") {
+  test("unstaged or unmaterialized frames fail loudly, naming the cause") {
     val plain = spark.range(10).select($"id".as("src"))
-    assert(Staging.loopShufflePartitions(spark, plain)
-      === Staging.LoopMinPartitions)
-  }
-
-  test("sliver mode flips off once frames exceed one target block") {
-    val e = staged(50000)
-    val key = Staging.LoopTargetBytesKey
-    try {
-      assert(Staging.loopShuffleConf(spark, e)._2,
-        "tiny frame must be sliver mode under the 64 MB default")
-      spark.conf.set(key, "4096")
-      assert(!Staging.loopShuffleConf(spark, e)._2,
-        "frame past one target block must leave sliver mode")
-    } finally spark.conf.unset(key)
-    Staging.release(e)
+    val lazyStaged = Staging.stage(plain, eager = false)
+    for (df <- Seq(plain, lazyStaged)) {
+      val err = intercept[IllegalArgumentException] {
+        Staging.loopShufflePartitions(spark, df)
+      }
+      assert(err.getMessage.contains("no materialized staged leaf"),
+        err.getMessage)
+    }
   }
 
   test("withLoopShuffle restores both confs on exit (and on throw)") {
@@ -71,7 +60,8 @@ class LoopPartitionsSpec extends SparkTestBase {
     Staging.withLoopShuffle(spark, e) {
       assert(spark.conf.get("spark.sql.shuffle.partitions")
         === Staging.LoopMinPartitions.toString)
-      assert(spark.conf.get("spark.sql.adaptive.enabled") === "false")
+      // the loop scope sets the width only; AQE is left as it was
+      assert(spark.conf.get("spark.sql.adaptive.enabled") === aqe0)
     }
     assert(spark.conf.get("spark.sql.shuffle.partitions") === parts0)
     assert(spark.conf.get("spark.sql.adaptive.enabled") === aqe0)
@@ -86,13 +76,14 @@ class LoopPartitionsSpec extends SparkTestBase {
   test("multiple staged frames sum their bytes") {
     val a = staged(50000)
     val b = staged(50000)
-    val key = Staging.LoopTargetBytesKey
-    try {
-      spark.conf.set(key, "4096")
-      val one = Staging.loopShufflePartitions(spark, a)
-      val two = Staging.loopShufflePartitions(spark, a, b)
-      assert(two >= one * 3 / 2, s"expected ~2x of $one, got $two")
-    } finally spark.conf.unset(key)
+    val one = Staging.stagedBytes(spark, a)
+    val two = Staging.stagedBytes(spark, a, b)
+    assert(two === one + Staging.stagedBytes(spark, b))
+    // a self-joined leaf counts once
+    assert(Staging.stagedBytes(spark, a, a.filter($"src" > 0)) === one)
+    val w1 = Staging.loopWidth(one * 100000)
+    val w2 = Staging.loopWidth(two * 100000)
+    assert(w2 >= w1 * 3 / 2, s"expected ~2x of $w1, got $w2")
     Staging.release(a); Staging.release(b)
   }
 }

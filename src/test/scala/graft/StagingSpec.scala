@@ -78,4 +78,21 @@ class StagingSpec extends SparkTestBase {
       Staging.sweep(spark)
     }
   }
+
+  test("reliable checkpoint mode measures its staged bytes") {
+    // the loop width reads these bytes; a reliable checkpoint holds no
+    // executor blocks, so they must come from the checkpoint files
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_")
+    spark.conf.set(Staging.ConfKey, dir.toString)
+    try {
+      val staged = Staging.stage(
+        spark.range(50000).select($"id".as("src"), ($"id" * 7).as("dst")),
+        eager = true)
+      assert(Staging.stagedBytes(spark, staged) > 0,
+        "reliable-checkpoint frame measured 0 bytes")
+    } finally {
+      spark.conf.unset(Staging.ConfKey)
+      Staging.sweep(spark)
+    }
+  }
 }
